@@ -567,13 +567,17 @@ def test_offline_reading_auto_derives_durable_checkpoint(spark, tmp_path,
     Output identity between the two checkpoint modes is pinned
     separately (test_trees/test_dedup durable-checkpoint tests)."""
     captured = {}
-    real = api.render_thread_pages
+    # the default page export receives the derived dir and hands it to
+    # the mega-thread walk (render_thread_pages' fused pass has no
+    # lineage to truncate and takes none)
+    real = api._routed_page_export
 
-    def capture(submissions, comments, checkpoint_dir=None, **kw):
+    def capture(submissions, comments, out_dir, checkpoint_dir, **kw):
         captured["ck"] = checkpoint_dir
-        return real(submissions, comments, checkpoint_dir=checkpoint_dir, **kw)
+        return real(submissions, comments, out_dir,
+                    checkpoint_dir=checkpoint_dir, **kw)
 
-    monkeypatch.setattr(api, "render_thread_pages", capture)
+    monkeypatch.setattr(api, "_routed_page_export", capture)
     p = tmp_path / "dump.jsonl"
     objs = [_sub(0)] + [_com(i) for i in range(2)]
     p.write_text("\n".join(json.dumps(o) for o in objs))

@@ -446,11 +446,51 @@ def test_incremental_simhash_dedup(spark):
     assert out[12]["is_new"] is True and out[12]["dup_of"] is None
 
 
+_BANDING_GOLDEN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "The quick brown fox jumps over the lazy cat"),  # near-dup of 1
+    (3, "two words"),  # below the shingle width: whole-text shingle
+]
+
+#: xxhash64 LSH bucket per band 0..15 (64 hashes, 16 bands, 3-word
+#: shingles) for _BANDING_GOLDEN_DOCS — stored minhash indexes hold
+#: these values, so any change to the hashing or the band fold breaks
+#: compatibility with every index already written.
+_BANDING_GOLDEN = {
+    1: [
+        -7409906206862121120, -5531820440818033989, -3945828888401618298,
+        -8640579968636410588, 7426346520465000359, -7991619784196300583,
+        -951396299885740100, -2694613883738169023, -8063343015639940897,
+        6668538773881401709, -2539597702835871573, -4041319661298515500,
+        -1513725640677304654, 3121043939267711301, 5248664146603585391,
+        -4035303921083062993,
+    ],
+    2: [
+        -7409906206862121120, -5531820440818033989, 9215315292944991911,
+        -6185622292263899709, -4680464290408696340, -7991619784196300583,
+        -951396299885740100, -2694613883738169023, -396499172957100519,
+        6668538773881401709, -2539597702835871573, -5307392928529084818,
+        -1513725640677304654, 3121043939267711301, 5248664146603585391,
+        3417449703834889757,
+    ],
+    3: [
+        9208747998081214708, 233459622493523951, -1357274395449712893,
+        1800111966450430415, -7531085061708839787, -7264168433743108407,
+        -5432990377923794395, 8609934952013671013, -5802552071508817395,
+        539189244688431265, 4022688420195831578, 5535060706874808723,
+        2487999367990203313, 7117149761257014714, 3435270751388477546,
+        -7669754718614841722,
+    ],
+}
+
+
 def test_band_buckets_from_sigs_identical_to_banding_path(spark):
     """band_buckets_from_sig_table must produce byte-identical (id,
     band, bucket) rows to minhash_band_buckets' xxhash64 family — the
     two constructions must inter-operate against the same stored
-    index."""
+    index — and both must reproduce the hard-coded golden rows, so
+    compatibility with indexes already written is checked against fixed
+    values, not only one path against the other."""
     from tests.conftest import SF_SMALL
     from timesearch_spark.operators.dedup import (
         band_buckets_from_sig_table,
@@ -459,21 +499,32 @@ def test_band_buckets_from_sigs_identical_to_banding_path(spark):
     )
     from timesearch_spark.tables import load
 
-    d = load(spark, SF_SMALL, "documents").limit(200)
-    via_banding = {
-        tuple(r)
-        for r in minhash_band_buckets(
-            d, "text", "doc_id", 64, 16, 3, "xxhash64"
-        ).collect()
-    }
-    via_sigs = {
-        tuple(r)
-        for r in band_buckets_from_sig_table(
-            minhash_signature_table(d, "text", "doc_id", 64, 3),
-            "doc_id", 64, 16,
-        ).collect()
-    }
+    def both_paths(d):
+        via_banding = {
+            tuple(r)
+            for r in minhash_band_buckets(
+                d, "text", "doc_id", 64, 16, 3, "xxhash64"
+            ).collect()
+        }
+        via_sigs = {
+            tuple(r)
+            for r in band_buckets_from_sig_table(
+                minhash_signature_table(d, "text", "doc_id", 64, 3),
+                "doc_id", 64, 16,
+            ).collect()
+        }
+        return via_banding, via_sigs
+
+    via_banding, via_sigs = both_paths(
+        load(spark, SF_SMALL, "documents").limit(200))
     assert via_banding == via_sigs and len(via_sigs) > 0
+
+    golden = {(i, band, bucket)
+              for i, buckets in _BANDING_GOLDEN.items()
+              for band, bucket in enumerate(buckets)}
+    fixed = spark.createDataFrame(_BANDING_GOLDEN_DOCS,
+                                  "doc_id long, text string")
+    assert both_paths(fixed) == (golden, golden)
 
 
 def test_release_pins_unpersists_shared_passes(spark):

@@ -558,9 +558,7 @@ def test_curate_corpus_dsir_rung(spark, tmp_path):
 
     from timesearch_spark.operators import pipeline as pl
     from timesearch_spark.operators.dedup import release_pins
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     clean = ("the cat sat on the mat and it is a fine day for cats to "
              "sit %s")
@@ -594,9 +592,9 @@ def test_curate_corpus_dsir_rung(spark, tmp_path):
 
     # staged twin: row-identical, rung committed
     store = str(tmp_path / "store")
-    staged = curate_corpus_staged(docs, store, min_tokens=5,
-                                  neardup_threshold=0.99,
-                                  dsir_target=target, dsir_k=6)
+    staged = curate_corpus(docs, store_dir=store, min_tokens=5,
+                           neardup_threshold=0.99,
+                           dsir_target=target, dsir_k=6)
     assert sorted(r["doc_id"] for r in staged.collect()) == got
     assert (tmp_path / "store" / "dsir" / "_SUCCESS").exists()
 
@@ -608,27 +606,27 @@ def test_curate_corpus_dsir_rung(spark, tmp_path):
 
     pl.dsir_resample = boom
     try:
-        again = curate_corpus_staged(docs, store, min_tokens=5,
-                                     neardup_threshold=0.99,
-                                     dsir_target=target, dsir_k=6)
+        again = curate_corpus(docs, store_dir=store, min_tokens=5,
+                              neardup_threshold=0.99,
+                              dsir_target=target, dsir_k=6)
         assert sorted(r["doc_id"] for r in again.collect()) == got
     finally:
         pl.dsir_resample = orig
 
     # mixing on/off over one store is the loud params error both ways
     with pytest.raises(ValueError, match="different parameters"):
-        curate_corpus_staged(docs, store, min_tokens=5,
-                             neardup_threshold=0.99)
+        curate_corpus(docs, store_dir=store, min_tokens=5,
+                      neardup_threshold=0.99)
     store2 = str(tmp_path / "store2")
-    curate_corpus_staged(docs, store2, min_tokens=5,
-                         neardup_threshold=0.99)
+    curate_corpus(docs, store_dir=store2, min_tokens=5,
+                  neardup_threshold=0.99)
     with pytest.raises(ValueError, match="different parameters"):
-        curate_corpus_staged(docs, store2, min_tokens=5,
-                             neardup_threshold=0.99,
-                             dsir_target=target, dsir_k=6)
+        curate_corpus(docs, store_dir=store2, min_tokens=5,
+                      neardup_threshold=0.99,
+                      dsir_target=target, dsir_k=6)
     with pytest.raises(ValueError, match="stop_after='dsir'"):
-        curate_corpus_staged(docs, str(tmp_path / "s3"), min_tokens=5,
-                             stop_after="dsir")
+        curate_corpus(docs, store_dir=str(tmp_path / "s3"), min_tokens=5,
+                      stop_after="dsir")
 
 
 def test_weighted_resample_rates_and_copies(spark):
@@ -785,21 +783,21 @@ def test_curate_staged_scheme_store_uses_durable_checkpoint(spark, tmp_path):
     store-adjacent _checkpoints/ (localCheckpoint's executor-local
     blocks die with their executor mid-loop) — with output row-identical
     to the plain-local staged run."""
-    from timesearch_spark.operators.pipeline import curate_corpus_staged
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
     plain = sorted(
         (r["doc_id"], r["lang_guess"], r["n_ws"], r["split"])
-        for r in curate_corpus_staged(
-            docs, str(tmp_path / "local_store"), min_tokens=5,
+        for r in curate_corpus(
+            docs, store_dir=str(tmp_path / "local_store"), min_tokens=5,
             neardup_threshold=0.5,
         ).collect()
     )
     schemed_root = f"file://{tmp_path}/schemed_store"
     schemed = sorted(
         (r["doc_id"], r["lang_guess"], r["n_ws"], r["split"])
-        for r in curate_corpus_staged(
-            docs, schemed_root, min_tokens=5, neardup_threshold=0.5,
+        for r in curate_corpus(
+            docs, store_dir=schemed_root, min_tokens=5, neardup_threshold=0.5,
         ).collect()
     )
     assert schemed == plain
@@ -818,9 +816,7 @@ def test_curate_staged_parity_and_resume(spark, tmp_path, monkeypatch):
     ladder; a second call resumes from the committed final rung without
     recomputing anything; resuming with different parameters is loud."""
     from timesearch_spark.operators import textstats
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
     expected = sorted(
@@ -832,8 +828,8 @@ def test_curate_staged_parity_and_resume(spark, tmp_path, monkeypatch):
     store = str(tmp_path / "store")
     got = sorted(
         (r["doc_id"], r["lang_guess"], r["n_ws"], r["split"])
-        for r in curate_corpus_staged(
-            docs, store, min_tokens=5, neardup_threshold=0.5
+        for r in curate_corpus(
+            docs, store_dir=store, min_tokens=5, neardup_threshold=0.5
         ).collect()
     )
     assert got == expected
@@ -846,15 +842,16 @@ def test_curate_staged_parity_and_resume(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(textstats, "text_profile_table", boom)
     again = sorted(
         (r["doc_id"], r["lang_guess"], r["n_ws"], r["split"])
-        for r in curate_corpus_staged(
-            docs, store, min_tokens=5, neardup_threshold=0.5
+        for r in curate_corpus(
+            docs, store_dir=store, min_tokens=5, neardup_threshold=0.5
         ).collect()
     )
     assert again == expected
 
     # parameter drift is an error naming the changed knob, not a mix
     with pytest.raises(ValueError, match="min_tokens"):
-        curate_corpus_staged(docs, store, min_tokens=6, neardup_threshold=0.5)
+        curate_corpus(docs, store_dir=store, min_tokens=6,
+                      neardup_threshold=0.5)
 
 
 @pytest.mark.slow
@@ -865,7 +862,7 @@ def test_curate_staged_input_identity_pinned(spark, tmp_path):
     in-memory inputs degrade to a warning, never a silent mix."""
     import warnings as _warnings
 
-    from timesearch_spark.operators.pipeline import curate_corpus_staged
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     src_a = str(tmp_path / "docs_a.parquet")
     src_b = str(tmp_path / "docs_b.parquet")
@@ -875,24 +872,24 @@ def test_curate_staged_input_identity_pinned(spark, tmp_path):
     store = str(tmp_path / "store_ident")
 
     a = spark.read.parquet(src_a)
-    first = curate_corpus_staged(a, store, min_tokens=5,
-                                 neardup_threshold=0.5).count()
+    first = curate_corpus(a, store_dir=store, min_tokens=5,
+                          neardup_threshold=0.5).count()
     # same files: clean resume, no warning
     with _warnings.catch_warnings():
         _warnings.simplefilter("error")
-        again = curate_corpus_staged(
-            spark.read.parquet(src_a), store, min_tokens=5,
+        again = curate_corpus(
+            spark.read.parquet(src_a), store_dir=store, min_tokens=5,
             neardup_threshold=0.5,
         ).count()
     assert again == first
     # different files: loud
     with pytest.raises(ValueError, match="input data"):
-        curate_corpus_staged(spark.read.parquet(src_b), store,
-                             min_tokens=5, neardup_threshold=0.5)
+        curate_corpus(spark.read.parquet(src_b), store_dir=store,
+                      min_tokens=5, neardup_threshold=0.5)
     # in-memory docs: unverifiable -> warning, not an error
     with pytest.warns(UserWarning, match="input identity"):
-        curate_corpus_staged(docs, store, min_tokens=5,
-                             neardup_threshold=0.5).count()
+        curate_corpus(docs, store_dir=store, min_tokens=5,
+                      neardup_threshold=0.5).count()
 
     # ADVICE r9: dropping the benchmark on resume (built WITH one, now
     # benchmark=None) must be loud — the committed rungs are
@@ -900,17 +897,17 @@ def test_curate_staged_input_identity_pinned(spark, tmp_path):
     # Pinned here: has_benchmark rides in the params manifest, so the
     # None<->non-None transition is parameter drift in BOTH directions.
     store2 = str(tmp_path / "store_bench")
-    curate_corpus_staged(spark.read.parquet(src_a), store2, min_tokens=5,
-                         neardup_threshold=0.5,
-                         benchmark=spark.read.parquet(src_b)).count()
+    curate_corpus(spark.read.parquet(src_a), store_dir=store2, min_tokens=5,
+                  neardup_threshold=0.5,
+                  benchmark=spark.read.parquet(src_b)).count()
     with pytest.raises(ValueError, match="has_benchmark"):
-        curate_corpus_staged(spark.read.parquet(src_a), store2,
-                             min_tokens=5, neardup_threshold=0.5,
-                             benchmark=None)
+        curate_corpus(spark.read.parquet(src_a), store_dir=store2,
+                      min_tokens=5, neardup_threshold=0.5,
+                      benchmark=None)
     with pytest.raises(ValueError, match="has_benchmark"):
-        curate_corpus_staged(spark.read.parquet(src_a), store,
-                             min_tokens=5, neardup_threshold=0.5,
-                             benchmark=spark.read.parquet(src_b))
+        curate_corpus(spark.read.parquet(src_a), store_dir=store,
+                      min_tokens=5, neardup_threshold=0.5,
+                      benchmark=spark.read.parquet(src_b))
 
 
 @pytest.mark.slow
@@ -920,14 +917,13 @@ def test_curate_staged_crash_resume(spark, tmp_path, monkeypatch):
     recomputed), the remaining rungs run, and the final table matches
     the one-shot ladder."""
     from timesearch_spark.operators import textstats
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
     store = str(tmp_path / "store")
-    partial = curate_corpus_staged(
-        docs, store, min_tokens=5, neardup_threshold=0.5, stop_after="exact"
+    partial = curate_corpus(
+        docs, store_dir=store, min_tokens=5, neardup_threshold=0.5,
+        stop_after="exact",
     )
     assert sorted(r["doc_id"] for r in partial.collect()) == [1, 3, 7]
     assert not (tmp_path / "store" / "final").exists()
@@ -945,8 +941,8 @@ def test_curate_staged_crash_resume(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(textstats, "text_profile_table", boom)
     got = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(
-            docs, store, min_tokens=5, neardup_threshold=0.5
+        for r in curate_corpus(
+            docs, store_dir=store, min_tokens=5, neardup_threshold=0.5
         ).collect()
     )
     assert got == expected
@@ -959,24 +955,24 @@ def test_curate_staged_input_rung_only_when_surgery(spark, tmp_path):
     source corpus (a pointless full write at scale)."""
     import os
 
-    from timesearch_spark.operators.pipeline import curate_corpus_staged
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
     plain = str(tmp_path / "plain")
-    curate_corpus_staged(docs, plain, min_tokens=5,
-                         neardup_threshold=0.5).collect()
+    curate_corpus(docs, store_dir=plain, min_tokens=5,
+                  neardup_threshold=0.5).collect()
     assert not os.path.exists(os.path.join(plain, "input"))
 
     surg = str(tmp_path / "surg")
-    curate_corpus_staged(docs, surg, min_tokens=5, neardup_threshold=0.5,
-                         paragraph_max_df=2).collect()
+    curate_corpus(docs, store_dir=surg, min_tokens=5, neardup_threshold=0.5,
+                  paragraph_max_df=2).collect()
     assert os.path.exists(os.path.join(surg, "input", "_SUCCESS"))
 
 
 def test_curate_staged_benchmark_identity_pinned(spark, tmp_path):
     """The input-identity pin covers the BENCHMARK side too: same docs,
     different benchmark parquet on resume is the same loud error."""
-    from timesearch_spark.operators.pipeline import curate_corpus_staged
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     docs = spark.createDataFrame(_LADDER_ROWS, "doc_id long, text string")
     dp = str(tmp_path / "docs.parquet")
@@ -988,13 +984,13 @@ def test_curate_staged_benchmark_identity_pinned(spark, tmp_path):
     store = str(tmp_path / "store_bench_ident")
 
     d = spark.read.parquet(dp)
-    curate_corpus_staged(
-        d, store, min_tokens=5, neardup_threshold=0.5,
+    curate_corpus(
+        d, store_dir=store, min_tokens=5, neardup_threshold=0.5,
         benchmark=spark.read.parquet(b1),
     ).count()
     with pytest.raises(ValueError, match="input data"):
-        curate_corpus_staged(
-            d, store, min_tokens=5, neardup_threshold=0.5,
+        curate_corpus(
+            d, store_dir=store, min_tokens=5, neardup_threshold=0.5,
             benchmark=spark.read.parquet(b2),
         )
 
@@ -1008,9 +1004,7 @@ def test_curate_staged_lm_rung(spark, tmp_path, monkeypatch):
     loud params error in both directions."""
     from timesearch_spark.operators import textstats
     from timesearch_spark.operators.dedup import release_pins
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     clean = ("the cat sat on the mat and it is a fine day for cats to "
              "sit %s")
@@ -1033,8 +1027,8 @@ def test_curate_staged_lm_rung(spark, tmp_path, monkeypatch):
     store = str(tmp_path / "store_lm")
     got = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(
-            docs, store, min_tokens=5, lm_ref=ref, lm_ppl_max=25.0,
+        for r in curate_corpus(
+            docs, store_dir=store, min_tokens=5, lm_ref=ref, lm_ppl_max=25.0,
         ).collect()
     )
     assert got == expected
@@ -1050,8 +1044,8 @@ def test_curate_staged_lm_rung(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(textstats, "unigram_lm", boom)
     again = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(
-            docs, store, min_tokens=5, lm_ref=ref, lm_ppl_max=25.0,
+        for r in curate_corpus(
+            docs, store_dir=store, min_tokens=5, lm_ref=ref, lm_ppl_max=25.0,
         ).collect()
     )
     assert again == expected
@@ -1059,19 +1053,19 @@ def test_curate_staged_lm_rung(spark, tmp_path, monkeypatch):
 
     # lm-on store resumed lm-off (and vice versa) is a loud params error
     with pytest.raises(ValueError, match="has_lm_ref"):
-        curate_corpus_staged(docs, store, min_tokens=5)
+        curate_corpus(docs, store_dir=store, min_tokens=5)
     store_off = str(tmp_path / "store_lm_off")
-    curate_corpus_staged(docs, store_off, min_tokens=5).count()
+    curate_corpus(docs, store_dir=store_off, min_tokens=5).count()
     with pytest.raises(ValueError, match="has_lm_ref"):
-        curate_corpus_staged(docs, store_off, min_tokens=5, lm_ref=ref,
-                             lm_ppl_max=25.0)
+        curate_corpus(docs, store_dir=store_off, min_tokens=5, lm_ref=ref,
+                      lm_ppl_max=25.0)
 
     # half-configured knobs and a nonexistent stop rung stay loud
     with pytest.raises(ValueError, match="lm_ref and lm_ppl_max"):
-        curate_corpus_staged(docs, str(tmp_path / "x1"), lm_ref=ref)
+        curate_corpus(docs, store_dir=str(tmp_path / "x1"), lm_ref=ref)
     with pytest.raises(ValueError, match="stop_after='lm_gated'"):
-        curate_corpus_staged(docs, str(tmp_path / "x2"),
-                             stop_after="lm_gated")
+        curate_corpus(docs, store_dir=str(tmp_path / "x2"),
+                      stop_after="lm_gated")
 
 
 def test_curate_corpus_clf_rung(spark):
@@ -1127,9 +1121,7 @@ def test_curate_staged_clf_rung(spark, tmp_path, monkeypatch):
     store is the loud params error both ways."""
     from timesearch_spark.operators import textstats
     from timesearch_spark.operators.dedup import release_pins
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     clean = ("the cat sat on the mat and it is a fine day for cats to "
              "sit %s")
@@ -1154,7 +1146,7 @@ def test_curate_staged_clf_rung(spark, tmp_path, monkeypatch):
     store = str(tmp_path / "store_clf")
     got = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(docs, store, **kw).collect()
+        for r in curate_corpus(docs, store_dir=store, **kw).collect()
     )
     assert got == expected
     assert (tmp_path / "store_clf" / "clf_gated" / "_SUCCESS").exists()
@@ -1165,7 +1157,7 @@ def test_curate_staged_clf_rung(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(textstats, "train_quality_classifier", boom)
     again = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(docs, store, **kw).collect()
+        for r in curate_corpus(docs, store_dir=store, **kw).collect()
     )
     assert again == expected
     monkeypatch.undo()
@@ -1173,14 +1165,14 @@ def test_curate_staged_clf_rung(spark, tmp_path, monkeypatch):
     import pytest
 
     with pytest.raises(ValueError, match="has_clf_ref"):
-        curate_corpus_staged(docs, store, min_tokens=5)
+        curate_corpus(docs, store_dir=store, min_tokens=5)
     store_off = str(tmp_path / "store_clf_off")
-    curate_corpus_staged(docs, store_off, min_tokens=5).count()
+    curate_corpus(docs, store_dir=store_off, min_tokens=5).count()
     with pytest.raises(ValueError, match="has_clf_ref"):
-        curate_corpus_staged(docs, store_off, **kw)
+        curate_corpus(docs, store_dir=store_off, **kw)
     with pytest.raises(ValueError, match="stop_after='clf_gated'"):
-        curate_corpus_staged(docs, str(tmp_path / "x3"),
-                             stop_after="clf_gated")
+        curate_corpus(docs, store_dir=str(tmp_path / "x3"),
+                      stop_after="clf_gated")
 
 
 @pytest.mark.slow
@@ -1192,7 +1184,7 @@ def test_curate_staged_lm_and_clf_rungs_compose(spark, tmp_path):
     catch dies at its own rung)."""
     from timesearch_spark.operators.dedup import release_pins
     from timesearch_spark.operators.pipeline import (
-        STAGED_RUNGS, curate_corpus, curate_corpus_staged,
+        STAGED_RUNGS, curate_corpus,
     )
 
     clean = ("the cat sat on the mat and it is a fine day for cats to "
@@ -1236,7 +1228,7 @@ def test_curate_staged_lm_and_clf_rungs_compose(spark, tmp_path):
     store = str(tmp_path / "store_both")
     got = sorted(
         (r["doc_id"], r["split"])
-        for r in curate_corpus_staged(docs, store, **kw).collect()
+        for r in curate_corpus(docs, store_dir=store, **kw).collect()
     )
     assert got == expected
     committed = [r for r in STAGED_RUNGS
@@ -1261,9 +1253,7 @@ def test_curate_line_dedup_rung(spark, tmp_path):
     import pytest
 
     from timesearch_spark.operators.dedup import release_pins
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
 
     clean = ("the cat sat on the mat and it is a fine day for cats to "
              "sit %s")
@@ -1282,15 +1272,15 @@ def test_curate_line_dedup_rung(spark, tmp_path):
     release_pins(out)
 
     store = str(tmp_path / "store_lines")
-    staged = curate_corpus_staged(docs, store, min_tokens=5,
-                                  line_dedup=True)
+    staged = curate_corpus(docs, store_dir=store, min_tokens=5,
+                           line_dedup=True)
     assert 9 in {r["doc_id"] for r in staged.collect()}
     inp = {r["doc_id"]: r["text"]
            for r in spark.read.parquet(f"{store}/input").collect()}
     assert inp[9] == line  # the committed input rung carries the rewrite
 
     with pytest.raises(ValueError, match="line_dedup"):
-        curate_corpus_staged(docs, store, min_tokens=5)
+        curate_corpus(docs, store_dir=store, min_tokens=5)
 
 
 def test_curate_corpus_html_rung(spark, tmp_path):
@@ -1302,9 +1292,7 @@ def test_curate_corpus_html_rung(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    from timesearch_spark.operators.pipeline import (
-        curate_corpus, curate_corpus_staged,
-    )
+    from timesearch_spark.operators.pipeline import curate_corpus
     from timesearch_spark.operators.textstats import html_to_text
 
     base = [
@@ -1338,13 +1326,13 @@ def test_curate_corpus_html_rung(spark, tmp_path):
     # staged: html rung checkpoints in 'input', run is row-identical,
     # and the manifest pins the param both ways
     store = str(tmp_path / "store")
-    staged = rows(curate_corpus_staged(wrapped, store, html=True))
+    staged = rows(curate_corpus(wrapped, store_dir=store, html=True))
     assert staged == got
     inp = spark.read.parquet(store + "/input")
     assert "<p>" not in (inp.filter("doc_id = 1").first()["text"] or "")
     with pytest.raises(ValueError, match="different parameters"):
-        curate_corpus_staged(wrapped, store)  # html-off over html-on store
+        curate_corpus(wrapped, store_dir=store)  # html-off over html-on store
     store2 = str(tmp_path / "store2")
-    curate_corpus_staged(plain, store2)
+    curate_corpus(plain, store_dir=store2)
     with pytest.raises(ValueError, match="different parameters"):
-        curate_corpus_staged(plain, store2, html=True)
+        curate_corpus(plain, store_dir=store2, html=True)

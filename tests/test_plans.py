@@ -358,8 +358,20 @@ def test_composed_ladders_stay_inside_shuffle_budget(spark):
     ceiling so any future re-embedding fails CI instead of waiting for
     a human to diff PLANS_r{N}.md.  The budget is a CEILING (audited
     values +~30% headroom), not a target."""
-    assert plans.num_shuffles(_q(spark, "pipeline_curate")) <= 18
+    from timesearch_spark.operators.dedup import release_pins
+
+    curate = _q(spark, "pipeline_curate")
+    assert plans.num_shuffles(curate) <= 18
     assert plans.num_shuffles(_q(spark, "dedup_cluster")) <= 10
+    # The default ladder persists exactly two rungs — the quality-gated
+    # survivors and the exact-dedup keepers with their cached __tok
+    # tokens (count taken before the staged ladder was folded into
+    # curate_corpus); a third pin or a lost token cache is a plan change.
+    pinned = curate._pinned
+    assert len(pinned) == 2
+    assert all(p.storageLevel.useMemory for p in pinned)
+    assert [("__tok" in p.columns) for p in pinned] == [False, True]
+    release_pins(curate)
 
 
 def test_decontaminate_construction_runs_no_job_for_parquet_benchmark(

@@ -39,15 +39,22 @@ def _run_update(spark, df, sink, tmp_path):
     # operator holding processing-time timers (scan_state's settled
     # timeout) spins empty "cleaning up state" batches forever waiting
     # for the 30-min timer, which used to burn the full 120 s wait AND
-    # leak a live query into the rest of the suite.  A completed batch
-    # that read ZERO rows means the source is drained (data batches are
-    # committed), so stop explicitly at that point.
+    # leak a live query into the rest of the suite.  A zero-row batch
+    # AFTER the last batch that carried data means the source is
+    # drained (data batches are committed), so stop explicitly at that
+    # point — but never on a zero-row batch that comes before any data.
     deadline = time.time() + 120
+    last_data_batch = None
     while q.isActive and time.time() < deadline:
         if q.awaitTermination(1):
             break
+        for p in q.recentProgress:
+            if p.get("numInputRows", 0) > 0:
+                last_data_batch = max(p["batchId"], last_data_batch or 0)
         lp = q.lastProgress
-        if lp is not None and lp.get("numInputRows", 0) == 0:
+        if (lp is not None and last_data_batch is not None
+                and lp["batchId"] > last_data_batch
+                and lp.get("numInputRows", 0) == 0):
             break
     if q.isActive:
         q.stop()

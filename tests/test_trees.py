@@ -147,7 +147,6 @@ def test_big_walk_drops_cycles_like_sequential(spark):
     assert [t[1] for t in seq] == ["t1_a"]
 
 
-@pytest.mark.slow
 def test_big_walk_randomized_forest(spark):
     """Fuzz mirror: random forests (phantoms, ties, nulls, deep chains)
     agree between the one-task walk and the distributed walk."""

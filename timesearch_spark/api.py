@@ -639,8 +639,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
     try:
         if over.limit(1).count() == 0:
             pages = render_thread_pages(
-                submissions, comments, checkpoint_dir=checkpoint_dir,
-                max_thread_rows=bound,
+                submissions, comments, max_thread_rows=bound,
             )
             # pages end '</html>' with no trailing newline (the
             # reference writes none) — '>' is the staged arm's
@@ -653,7 +652,6 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                     F.broadcast(over_subs), "idstr", "left_anti"),
                 normed.join(F.broadcast(over), "submission",
                             "left_anti"),
-                checkpoint_dir=checkpoint_dir,
                 max_thread_rows=bound,
             )
             n = exports.write_thread_docs(

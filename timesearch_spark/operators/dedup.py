@@ -41,32 +41,19 @@ def tokens(col) -> Column:
     return F.filter(F.split(F.lower(F.trim(_c(col))), r"\s+"), lambda x: x != "")
 
 
-def shingles(col, k: int = 3) -> Column:
-    """k-word shingles as strings; documents shorter than k words yield
-    their whole token join as the single shingle.
-
-    HOT-PATH WARNING: applied straight to a TEXT column, the per-gram
-    ``slice`` lambda captures the tokenizing ``split`` subtree, and
-    interpreted HOF lambdas re-evaluate captured subtrees per element —
-    the optimized plan carries split() once per gram, O(tokens × grams)
-    per document.  Every scale path should materialize the token array
-    in its own projection and build grams with :func:`shingles_from`
-    (split pinned to once per document — 1.6× on the sf0.1 shingle
-    explode, verified in the optimizedPlan by tests/test_plans.py)."""
-    t = tokens(col)
-    n = F.size(t)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.array_join(F.slice(t, i, k), " "),
-    )
-    return F.when(n >= k, grams).otherwise(F.array(F.array_join(t, " ")))
-
-
 def shingles_from(tok_col, k: int = 3) -> Column:
-    """:func:`shingles` over an ALREADY-MATERIALIZED token-array column
-    (same output).  The lambda's captured reference is then a plain
-    attribute — per-element re-evaluation costs an array pointer read,
-    not a re-tokenization.  CollapseProject leaves the materializing
+    """k-word shingles as strings over an ALREADY-MATERIALIZED
+    token-array column (:func:`tokens`); documents shorter than k words
+    yield their whole token join as the single shingle.
+
+    Why a token column and not the text: applied straight to text, the
+    per-gram ``slice`` lambda would capture the tokenizing ``split``
+    subtree, and interpreted HOF lambdas re-evaluate captured subtrees
+    per element — split() once per gram, O(tokens × grams) per document.
+    Here the captured reference is a plain attribute — per-element
+    re-evaluation costs an array pointer read, not a re-tokenization
+    (1.6× on the sf0.1 shingle explode, verified in the optimizedPlan by
+    tests/test_plans.py).  CollapseProject leaves the materializing
     projection alone because the alias is non-cheap and referenced more
     than once."""
     t = _c(tok_col)
@@ -126,14 +113,6 @@ def exact_dedup_groups(
             F.min(id_col).alias("keeper_id"),
             F.count("*").alias("dup_count"),
         )
-    )
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct normalized text (min id wins)."""
-    w_keep = exact_dedup_groups(df, text_col, id_col).select("keeper_id")
-    return df.join(
-        w_keep, df[id_col] == w_keep.keeper_id, "left_semi"
     )
 
 
@@ -218,19 +197,6 @@ def incremental_dedup(
 
 
 # --- minhash + LSH ------------------------------------------------------------
-
-def minhash_signature(col, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """num_hashes minhash values as an array column: h_i = min over
-    shingles of xxhash64(base_hash, i).  Each shingle's string is hashed
-    ONCE; the per-i variation re-hashes the resulting long (two fixed-width
-    words), which is ~the cost of a multiply-add, not of re-reading the
-    string num_hashes times."""
-    base = F.transform(F.array_distinct(shingles(col, shingle_k)), lambda s: F.xxhash64(s))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(base, lambda h: F.xxhash64(h, i))),
-    )
-
 
 def minhash_signature_table(
     df: DataFrame,

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from timesearch_spark import fs as fsmod
 from timesearch_spark.operators.dedup import shingles_from, tokens
 
 
@@ -502,16 +503,17 @@ def deterministic_shuffle(
 # --- end-to-end corpus curation ----------------------------------------------
 
 def rung_counts(metrics: dict) -> dict[str, int]:
-    """Row count per recorded curate rung, as ONE Spark job (a union of
-    per-rung count aggregates).  Call AFTER consuming the ladder's
-    result and BEFORE ``release_pins``: every gate boundary (gated and,
-    when on, lm_gated/clf_gated) plus exact are persisted by the ladder
-    itself, neardup/decontaminated are pinned extra while an audit dict
-    is passed, and the near-dup component state is checkpointed — so
-    those counts are cache-local scans.  The one
+    """Row count per recorded curate rung, in ladder order, as ONE Spark
+    job (a union of per-rung count aggregates).  Call AFTER consuming
+    the ladder's result and BEFORE ``release_pins``: every gate boundary
+    (gated and, when on, lm_gated/clf_gated) plus exact are persisted by
+    the ladder itself, neardup/decontaminated are pinned extra while an
+    audit dict is passed, and the near-dup component state is
+    checkpointed — so those counts are cache-local scans.  The one
     exception is ``input``, which re-runs the scan plus any
     paragraph-boilerplate rung (persisting the full input corpus just
-    to count it would cost more than the recount at every scale).
+    to count it would cost more than the recount at every scale).  With
+    ``store_dir`` the recorded rungs are the committed parquet reads.
 
     (An earlier design observed the counts inside the main action with
     :class:`pyspark.sql.Observation`; observed nodes BELOW a persist
@@ -529,13 +531,13 @@ def rung_counts(metrics: dict) -> dict[str, int]:
         for k, df in metrics.items()
     ]
     one = reduce(lambda a, b: a.unionByName(b), parts)
-    return {r["rung"]: int(r["rows"]) for r in one.collect()}
+    counts = {r["rung"]: int(r["rows"]) for r in one.collect()}
+    return {k: counts[k] for k in metrics}
 
 
 # --- shared rung builders ------------------------------------------------------
-# Both ladder forms (the one-shot composed plan and the rung-checkpointed
-# staged runner) compose exactly these builders, so "row-identical output"
-# is structural, not a discipline of keeping two copies in sync.
+# The ladder (curate_corpus) composes exactly these builders whichever way
+# its rung boundaries are crossed, so "row-identical output" is structural.
 
 def _rung_surgery(docs, text_col, id_col, paragraph_max_df, span_n,
                   span_stride, line_dedup=False, html=False):
@@ -638,29 +640,272 @@ def _rung_decontam_hits(docs, benchmark, text_col, id_col, n, min_frac):
     ).select(id_col)
 
 
-def _validate_clf_params(clf_pos, clf_neg, clf_min_score, where: str):
-    """The classifier rung's three knobs come together or not at all —
-    a labeled sample without a score bound (or any other partial
-    configuration) would silently gate nothing."""
-    given = [clf_pos is not None, clf_neg is not None,
-             clf_min_score is not None]
-    if any(given) and not all(given):
-        raise ValueError(
-            f"{where}: clf_pos, clf_neg and clf_min_score come together "
-            "— a partially-configured classifier rung would silently "
-            "gate nothing"
-        )
+#: Rung order of the ladder.  Under ``store_dir`` each entry is a parquet
+#: dir under the store root whose presence (with Spark's _SUCCESS marker)
+#: means "completed".
+STAGED_RUNGS = ("input", "gated", "lm_gated", "clf_gated", "exact",
+                "neardup", "decontaminated", "dsir", "final")
 
 
-def _validate_dsir_params(dsir_target, dsir_k, where: str):
-    """The DSIR rung's two knobs come together or not at all — a target
-    corpus without a selection size (or vice versa) cannot select."""
-    given = [dsir_target is not None, dsir_k is not None]
-    if any(given) and not all(given):
-        raise ValueError(
-            f"{where}: dsir_target and dsir_k come together — a "
-            "partially-configured DSIR rung cannot select"
+def _input_identity(df) -> str | None:
+    """Stable identity of a DataFrame's file-backed inputs: sha256 over
+    the sorted ``inputFiles`` list (paths, which for immutable parquet
+    layouts identify the bytes).  None for in-memory / non-file plans —
+    those cannot be identified and the caller falls back to a warning."""
+    if df is None:
+        return None
+    try:
+        files = sorted(df.inputFiles())
+    except Exception:
+        return None
+    if not files:
+        return None
+    import hashlib
+
+    return hashlib.sha256("\n".join(files).encode("utf-8")).hexdigest()
+
+
+class _StopAfter(Exception):
+    """Carries the ``stop_after`` rung's DataFrame out of the ladder once
+    that rung has committed."""
+
+    def __init__(self, df: DataFrame):
+        super().__init__()
+        self.df = df
+
+
+class _PinnedRungs:
+    """In-memory rung boundaries (``store_dir`` unset): the ladder stays
+    ONE composed plan.  Each persisted boundary is consumed by 2-3
+    downstream branches (gated → exact agg + join; exact → minhash twice
+    + the left_anti; pairs → component nodes + edges).  Without persist()
+    the whole upstream ladder — profile explode+agg, dedup joins, minhash
+    banding — re-executes once PER BRANCH inside the one final action
+    (measured 3× wall-clock at sf0.1).  persist is lazy (the returned
+    plan stays declarative) and the pinned rungs are the pruned survivor
+    sets, not the raw corpus.  The handles ride on the returned
+    DataFrame as ``_pinned``: a caller running the ladder in a loop
+    should dedup.release_pins(result) after consuming it, or the cache
+    entries live for the session."""
+
+    #: the exact rung caches the token arrays for the near-dup rung
+    tok_col = "__tok"
+
+    def __init__(self, text_col: str, metrics: dict | None,
+                 checkpoint_dir: str | None):
+        self.text_col = text_col
+        self.metrics = metrics
+        self.checkpoint_dir = checkpoint_dir
+        self.pins: list = []
+
+    def run(self, ladder):
+        return ladder(self)
+
+    def input(self, docs: DataFrame, surgery) -> DataFrame:
+        if surgery is not None:
+            # the span rung's persisted sub-plans must outlive the
+            # returned plan, so they join the release contract
+            docs, span_pins = surgery()
+            self.pins += span_pins
+        return self._record("input", docs)
+
+    def cross(self, rung: str, build) -> DataFrame:
+        df = build()
+        if rung == "exact":
+            # The persisted rung ALSO materializes the token arrays
+            # (__tok): the near-dup rung consumes tokens twice (banding +
+            # verify), so tokenizing once into the cache trades
+            # ~text-sized extra cache for zero re-splits downstream — the
+            # audit boundary and the output stay token-free (the record
+            # is the dropped projection, a plain Project over the cached
+            # plan, so rung_counts stays cache-local).
+            df = df.withColumn(self.tok_col, tokens(self.text_col)).persist()
+            self.pins.append(df)
+            self._record(rung, df.drop(self.tok_col))
+            return df
+        if rung in ("gated", "lm_gated", "clf_gated") \
+                or self.metrics is not None:
+            # every gate boundary is persisted (the next gate or the
+            # exact rung consumes it twice: keeper agg + join) and its
+            # handle kept.  The later boundaries (neardup,
+            # decontaminated, dsir) are consumed once by the main plan;
+            # they are pinned only while an audit is requested, so
+            # rung_counts stays cache-local instead of re-running the
+            # component/decontamination passes.
+            df = df.persist()
+            self.pins.append(df)
+        return self._record(rung, df)
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Pin a plan an eager model fit is about to scan, so the fit
+        materializes the upstream ladder into cache once and the plan
+        built on it reuses that (already pinned when the audit pinned
+        the boundary — don't re-pin)."""
+        if not df.storageLevel.useMemory:
+            df = df.persist()
+            self.pins.append(df)
+        return df
+
+    def finish(self, build) -> DataFrame:
+        out = build()
+        out._pinned = self.pins
+        return out
+
+    def _record(self, rung: str, df: DataFrame) -> DataFrame:
+        if self.metrics is not None:
+            self.metrics[rung] = df
+        return df
+
+
+class _ParquetRungs:
+    """Parquet-committed rung boundaries (``store_dir`` set): each rung
+    writes to ``<store_dir>/_tmp_<rung>`` and renames into place, so
+    readers and resumers only ever see complete rungs (Spark's
+    ``_SUCCESS`` marker is checked too, guarding a crash between write
+    and rename).  A committed rung is read back instead of rebuilt, so
+    a rung's model fit (LM vocab, classifier weights, DSIR buckets)
+    reruns only when that rung itself must be recomputed.  Nothing
+    stays persist()ed and nothing rides on ``_pinned``: the parquet
+    rungs ARE the pins."""
+
+    #: committed rungs are token-free parquet; near-dup re-tokenizes
+    tok_col = None
+
+    def __init__(self, spark, store_dir: str, params: dict, sides: dict,
+                 resume: bool, lease_timeout_sec: float | None,
+                 stop_after: str | None, metrics: dict | None,
+                 checkpoint_dir: str | None):
+        self.spark = spark
+        self.fs = fsmod.get_fs(spark, store_dir)
+        self.root = store_dir.rstrip("/")
+        self.params = params
+        self.sides = sides  # input name -> DataFrame, or None when unset
+        self.resume = resume
+        self.lease_timeout_sec = lease_timeout_sec
+        self.stop_after = stop_after
+        self.metrics = metrics
+        # a scheme:// store means cluster storage: the hash-min loop
+        # checkpoints durably next to the rungs instead of into
+        # executor-local blocks
+        self.checkpoint_dir = (
+            checkpoint_dir or fsmod.derive_checkpoint_dir(self.root))
+
+    def run(self, ladder):
+        self.fs.mkdirs(self.root)
+        with fsmod.WriterLease.maybe(self.fs, self.root,
+                                     self.lease_timeout_sec):
+            self._open_manifest()
+            try:
+                return ladder(self)
+            except _StopAfter as stop:
+                return stop.df
+
+    def _open_manifest(self) -> None:
+        """Start a fresh store, or check that resuming it is safe: the
+        same parameters and the same input files as the committed
+        rungs."""
+        manifest_path = f"{self.root}/curation.json"
+        prev = fsmod.read_json(self.fs, manifest_path, default={})
+        params = self.params
+        inputs = {k: _input_identity(df) for k, df in self.sides.items()}
+        if not self.resume or not prev:
+            for rung in STAGED_RUNGS:
+                self.fs.delete(f"{self.root}/{rung}")
+                self.fs.delete(f"{self.root}/_tmp_{rung}")
+            fsmod.write_json_atomic(
+                self.fs, manifest_path, {"params": params, "inputs": inputs})
+            return
+        if prev.get("params") != params:
+            # union of key sets: an lm-on manifest resumed by an lm-off
+            # run differs only by keys ABSENT from the new params
+            changed = sorted(
+                k for k in set(params) | set(prev.get("params", {}))
+                if prev.get("params", {}).get(k) != params.get(k)
+            )
+            raise ValueError(
+                "curate_corpus: resuming with different parameters "
+                f"than the manifest at {manifest_path} (changed: {changed}); "
+                "pass resume=False to discard the stored rungs and rerun"
+            )
+        # input-identity drift is the same class of error as a parameter
+        # change: committed rungs were computed from the OLD files, and
+        # mixing them with new-data rungs is the silently-mixed corpus
+        # the manifest exists to prevent
+        prev_inputs = prev.get("inputs", {})
+        drifted = sorted(
+            k for k in inputs
+            if inputs[k] is not None
+            and prev_inputs.get(k) is not None
+            and inputs[k] != prev_inputs[k]
         )
+        if drifted:
+            raise ValueError(
+                "curate_corpus: resuming against different input data "
+                f"than the manifest at {manifest_path} (drifted: "
+                f"{drifted}); pass resume=False to discard the stored "
+                "rungs and rerun"
+            )
+        unverifiable = sorted(
+            k for k, df in self.sides.items()
+            if df is not None
+            and (inputs[k] is None or prev_inputs.get(k) is None)
+        )
+        if unverifiable:
+            import warnings
+
+            warnings.warn(
+                "curate_corpus: cannot verify input identity for "
+                f"{unverifiable} (in-memory input or pre-r9 manifest) — "
+                "the resume assumes the same inputs as the committed rungs",
+                UserWarning,
+                stacklevel=4,
+            )
+
+    def input(self, docs: DataFrame, surgery) -> DataFrame:
+        if surgery is None:
+            # The input rung exists to checkpoint the text surgery; with
+            # none configured it would be a byte-identical full copy of
+            # the (at scale, 100 TB) source corpus — skip the write and
+            # let the gate read the source directly.  Resume is
+            # unaffected: the resume contract already requires the
+            # caller to pass the same docs, which IS the identity rung.
+            return docs
+        # The span rung's persisted sub-plans are released as soon as
+        # the rung parquet is committed — the parquet IS the pin from
+        # then on.
+        span_pins: list = []
+
+        def build():
+            df, pins = surgery()
+            span_pins.extend(pins)
+            return df
+
+        try:
+            return self.cross("input", build)
+        finally:
+            for p in span_pins:
+                p.unpersist()
+
+    def cross(self, rung: str, build) -> DataFrame:
+        final = f"{self.root}/{rung}"
+        if not self.fs.exists(f"{final}/_SUCCESS"):
+            tmp = f"{self.root}/_tmp_{rung}"
+            self.fs.delete(tmp)
+            build().write.mode("overwrite").parquet(tmp)
+            self.fs.delete(final)  # a crashed write without _SUCCESS
+            self.fs.rename(tmp, final)
+        df = self.spark.read.parquet(final)
+        if self.metrics is not None:
+            self.metrics[rung] = df
+        if rung == self.stop_after:
+            raise _StopAfter(df)
+        return df
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        return df  # already a committed parquet read
+
+    def finish(self, build) -> DataFrame:
+        return self.cross("final", build)
 
 
 def curate_corpus(
@@ -694,14 +939,17 @@ def curate_corpus(
     dsir_target: DataFrame | None = None,
     dsir_k: int | None = None,
     dsir_dim: int = 1 << 14,
+    store_dir: str | None = None,
+    resume: bool = True,
+    lease_timeout_sec: float | None = None,
+    stop_after: str | None = None,
 ) -> DataFrame:
-    """The full curation ladder a pretraining pipeline runs, as ONE
-    composed plan: optional HTML→text extraction (``html`` — the raw
-    web-corpus ingestion stage, textstats.html_to_text, pure map; runs
-    before everything so every later signal sees prose, not markup) →
-    optional within-document duplicate-line removal
-    (``line_dedup`` — the finest-grain surgery, pure map) → optional
-    paragraph-boilerplate removal
+    """The full curation ladder a pretraining pipeline runs: optional
+    HTML→text extraction (``html`` — the raw web-corpus ingestion stage,
+    textstats.html_to_text, pure map; runs before everything so every
+    later signal sees prose, not markup) → optional within-document
+    duplicate-line removal (``line_dedup`` — the finest-grain surgery,
+    pure map) → optional paragraph-boilerplate removal
     (``paragraph_max_df``) → optional repeated-span removal
     (``span_n`` — the windowed exact-substring rung, one surviving
     winner per span) → quality signals → language/quality gate →
@@ -731,595 +979,235 @@ def curate_corpus(
     matters for cost: the quality gate runs FIRST so dedup's shuffles
     only carry documents that could survive.
 
+    How a rung boundary is crossed depends on ``store_dir``; the rungs
+    and their decisions do not, so both forms return row-identical
+    tables (test-pinned):
+
+    - unset: ONE composed plan with in-memory pins (see
+      :class:`_PinnedRungs`).  Call ``dedup.release_pins(result)`` once
+      the result is consumed.
+    - set: each rung boundary is CHECKPOINTED to ``store_dir`` (see
+      :class:`_ParquetRungs`) — the fault-tolerance contract a
+      multi-hour curation job needs: a run killed at rung 4 restarts
+      from rung 4, not rung 0.  A ``curation.json`` manifest pins the
+      ladder parameters AND the input identity (a digest of the docs'
+      and the side inputs' sorted parquet ``inputFiles``): resuming with
+      DIFFERENT parameters or against DIFFERENT input data is a loud
+      error, not a silently mixed corpus.  In-memory inputs (no file
+      lineage) cannot be identified; those resume with a
+      ``UserWarning`` and the same-docs contract falls back to the
+      caller.  ``resume=False`` wipes the store and recomputes
+      everything.  ``lease_timeout_sec`` serializes two concurrent
+      runners over the same store via :class:`~timesearch_spark.fs.
+      WriterLease` (same contract as the ingest stores).  ``stop_after``
+      (a rung name) ends the run after that rung commits — the ops hook
+      for staged/priority scheduling, and the crash injection point for
+      the resume tests.  Trade: every boundary pays a parquet
+      write+read instead of an in-memory pin — pure overhead at
+      benchmark scale, and at 100 TB the difference between re-running
+      a day of shuffles and reading yesterday's survivors back columnar.
+      ``resume``, ``lease_timeout_sec`` and ``stop_after`` need
+      ``store_dir``.
+
     ``metrics``: pass an empty dict and each rung-boundary DataFrame is
     recorded under its name (``input``, ``gated``, ``lm_gated`` /
     ``clf_gated`` when those rungs are on, ``exact``, ``neardup``,
-    ``decontaminated``, ``dsir`` when selected) — the
-    audit a production curation run logs.  After consuming the result (and before
-    ``release_pins``), :func:`rung_counts` turns the dict into row
-    counts with one cache-local job over the pinned boundaries.
+    ``decontaminated``, ``dsir`` when selected; with ``store_dir`` the
+    committed rungs, ``final`` included, and ``input`` only when
+    surgery is on) — the audit a production curation run logs.  After
+    consuming the result (and before ``release_pins``),
+    :func:`rung_counts` turns the dict into row counts with one job over
+    the pinned or committed boundaries.
     """
-    audit_pins: list = []
+    for knobs, values in (
+        ("lm_ref and lm_ppl_max", (lm_ref, lm_ppl_max)),
+        ("clf_pos, clf_neg and clf_min_score",
+         (clf_pos, clf_neg, clf_min_score)),
+        ("dsir_target and dsir_k", (dsir_target, dsir_k)),
+    ):
+        given = [v is not None for v in values]
+        if any(given) and not all(given):
+            raise ValueError(
+                f"curate_corpus: {knobs} come together — a "
+                "partially-configured rung would silently gate nothing")
+    has_surgery = (paragraph_max_df is not None or span_n is not None
+                   or line_dedup or html)
 
-    def obs(df: DataFrame, rung: str) -> DataFrame:
-        if metrics is None:
-            return df
-        if rung in ("neardup", "decontaminated", "dsir"):
-            # these boundaries are not otherwise persisted (consumed
-            # once by the main plan); pin them while an audit is
-            # requested so rung_counts stays cache-local instead of
-            # re-running the component/decontamination passes.  The
-            # handles ride on _pinned like every other rung.
-            df = df.persist()
-            audit_pins.append(df)
-        metrics[rung] = df
-        return df
+    if store_dir is None:
+        if not resume or lease_timeout_sec is not None \
+                or stop_after is not None:
+            raise ValueError(
+                "curate_corpus: resume, lease_timeout_sec and stop_after "
+                "need store_dir")
+        boundary = _PinnedRungs(text_col, metrics, checkpoint_dir)
+    else:
+        optional = {"input": has_surgery, "lm_gated": lm_ref is not None,
+                    "clf_gated": clf_pos is not None,
+                    "decontaminated": benchmark is not None,
+                    "dsir": dsir_target is not None}
+        if stop_after is not None and (
+                stop_after not in STAGED_RUNGS
+                or not optional.get(stop_after, True)):
+            raise ValueError(
+                f"stop_after={stop_after!r} is not a rung of this ladder "
+                f"(rungs: {STAGED_RUNGS}; the optional ones exist only "
+                "when configured)")
+        params = {
+            "text_col": text_col, "id_col": id_col, "langs": list(langs),
+            "min_tokens": min_tokens, "max_dup_line_frac": max_dup_line_frac,
+            "max_top_bigram_frac": max_top_bigram_frac,
+            "neardup_threshold": neardup_threshold,
+            "paragraph_max_df": paragraph_max_df,
+            "span_n": span_n, "span_stride": span_stride,
+            "has_benchmark": benchmark is not None,
+            "decontam_n": decontam_n, "decontam_min_frac": decontam_min_frac,
+            "train": train, "val": val,
+        }
+        # The optional rungs' keys are present only when the rung is ON:
+        # a manifest written before a rung existed stays resumable by a
+        # run with that rung off, while mixing on and off runs over one
+        # store is the loud params error.
+        if line_dedup:
+            params["line_dedup"] = True
+        if html:
+            params["html"] = True
+        if lm_ref is not None:
+            params.update({"lm_ppl_max": lm_ppl_max,
+                           "lm_vocab_size": lm_vocab_size,
+                           "has_lm_ref": True})
+        if clf_pos is not None:
+            params.update({"clf_min_score": clf_min_score,
+                           "clf_dim": clf_dim, "has_clf_ref": True})
+        if dsir_target is not None:
+            params.update({"dsir_k": dsir_k, "dsir_dim": dsir_dim,
+                           "has_dsir_target": True})
+        sides = {"docs": docs, "benchmark": benchmark, "lm_ref": lm_ref,
+                 "clf_pos": clf_pos, "clf_neg": clf_neg,
+                 "dsir_target": dsir_target}
+        boundary = _ParquetRungs(
+            docs.sparkSession, store_dir, params, sides, resume,
+            lease_timeout_sec, stop_after, metrics, checkpoint_dir)
 
-    docs, span_pins = _rung_surgery(
-        docs, text_col, id_col, paragraph_max_df, span_n, span_stride,
-        line_dedup=line_dedup, html=html,
-    )
-    docs = obs(docs, "input")
-    keep_quality = _rung_quality_keep(
-        docs, text_col, id_col, langs, min_tokens,
-        max_dup_line_frac, max_top_bigram_frac,
-    )
-    # Each rung boundary below is consumed by 2-3 downstream branches
-    # (gated → exact agg + join; exact → minhash twice + the left_anti;
-    # pairs → component nodes + edges).  Without persist() the whole
-    # upstream ladder — profile explode+agg, dedup joins, minhash
-    # banding — re-executes once PER BRANCH inside the one final action
-    # (measured 3× wall-clock at sf0.1).  persist is lazy (the returned
-    # plan stays declarative) and the pinned rungs are the pruned
-    # survivor sets, not the raw corpus.  The handles ride on the
-    # returned DataFrame as ``_pinned``: a caller running the ladder in
-    # a loop should dedup.release_pins(result) after consuming it, or
-    # the cache entries live for the session.
-    gated = obs(docs.join(keep_quality, id_col), "gated").persist()
-    # every (possibly rebound) gate boundary is persisted and its handle
-    # kept: the exact rung consumes the final `gated` twice (keeper agg
-    # + join) and rung_counts scans it once more, and rebinding the name
-    # without keeping the handle would leak the previous boundary's
-    # cache entry past release_pins.
-    rung_pins: list = [gated]
-
-    if (lm_ref is None) != (lm_ppl_max is None):
-        raise ValueError(
-            "curate_corpus: lm_ref and lm_ppl_max come together — a "
-            "reference corpus without a perplexity bound (or vice "
-            "versa) would silently gate nothing")
-    if lm_ref is not None:
-        # CCNet-style perplexity gate on the heuristic-gated survivors:
-        # the vocab is bounded broadcast state, so this adds one
-        # explode + broadcast-join + hash-agg pass — no new corpus-
-        # sized shuffle — and runs BEFORE dedup for the same reason the
-        # quality gate does (dedup's shuffles only carry keepers).
-        from timesearch_spark.operators.textstats import lm_score, unigram_lm
-
-        vocab, oov = unigram_lm(lm_ref, text_col, vocab_size=lm_vocab_size)
-        keep_lm = (
-            lm_score(gated, vocab, oov, text_col, id_col)
-            .filter((F.col("n_tok") > 0) & (F.col("ppl") <= lm_ppl_max))
-            .select(id_col)
-        )
-        gated = obs(
-            gated.join(keep_lm, id_col, "left_semi"), "lm_gated"
-        ).persist()
-        rung_pins.append(gated)
-
-    _validate_clf_params(clf_pos, clf_neg, clf_min_score, "curate_corpus")
-    if clf_pos is not None:
-        # Trained-classifier gate (the third standard quality filter,
-        # after the heuristic gate and the LM rung): fit once from the
-        # bounded labeled sample, then one map-side scoring pass over
-        # the survivors — the weight table is broadcast state like the
-        # LM vocab, and the rung runs BEFORE dedup for the same cost
-        # argument as the other two gates.
-        from timesearch_spark.operators.textstats import (
-            quality_clf_score, train_quality_classifier,
+    def surgery():
+        return _rung_surgery(
+            docs, text_col, id_col, paragraph_max_df, span_n, span_stride,
+            line_dedup=line_dedup, html=html,
         )
 
-        Wc, bc = train_quality_classifier(
-            clf_pos, clf_neg, text_col, dim=clf_dim
-        )
-        keep_clf = (
-            quality_clf_score(gated, Wc, bc, text_col, id_col, dim=clf_dim)
-            .filter(F.col("score") >= clf_min_score)
-            .select(id_col)
-        )
-        gated = obs(
-            gated.join(keep_clf, id_col, "left_semi"), "clf_gated"
-        ).persist()
-        rung_pins.append(gated)
-
-    # exact dedup: keep the lowest id of each identical-text group.
-    # The persisted rung ALSO materializes the token arrays (__tok):
-    # the near-dup rung below consumes tokens twice (banding + verify),
-    # so tokenizing once into the cache trades ~text-sized extra cache
-    # for zero re-splits downstream — the audit boundary and the output
-    # stay token-free (obs records the dropped projection, which is a
-    # plain Project over the cached plan, so rung_counts stays
-    # cache-local).
-    exact = gated.join(
-        _rung_exact_keepers(gated, text_col, id_col), id_col
-    ).withColumn("__tok", tokens(text_col)).persist()
-    obs(exact.drop("__tok"), "exact")
-
-    # near-dup removal, transitively closed: pairs → components → keeper
-    # (shared builder; see _rung_neardup_non_keepers for the plan notes)
-    surviving = obs(
-        exact.join(
-            _rung_neardup_non_keepers(
-                exact, text_col, id_col, neardup_threshold,
-                checkpoint_dir=checkpoint_dir, tok_col="__tok",
+    def ladder(b):
+        cur = b.input(docs, surgery if has_surgery else None)
+        cur = b.cross("gated", lambda: cur.join(
+            _rung_quality_keep(
+                cur, text_col, id_col, langs, min_tokens,
+                max_dup_line_frac, max_top_bigram_frac,
             ),
             id_col,
-            "left_anti",
-        ).drop("__tok"),
-        "neardup",
-    )
-
-    if benchmark is not None:
-        # decontaminate LAST: the broadcast-probe runs over the smallest
-        # surviving set, and near-dups of a leaked doc are already gone
-        hits = _rung_decontam_hits(
-            surviving, benchmark, text_col, id_col,
-            decontam_n, decontam_min_frac,
-        )
-        surviving = obs(
-            surviving.join(hits, id_col, "left_anti"), "decontaminated"
-        )
-
-    _validate_dsir_params(dsir_target, dsir_k, "curate_corpus")
-    if dsir_target is not None:
-        # DSIR selection LAST (public recipe: Xie et al. 2023): the
-        # importance pool is the final survivor set.  dsir_resample
-        # collects its two dim-bounded bucket models EAGERLY (broadcast-
-        # state build, like the near-dup rung's octet probe), so the
-        # survivor boundary is pinned first — the model fit materializes
-        # the upstream ladder into cache once and the selection join
-        # reuses it.  (Already pinned when a metrics dict made obs()
-        # persist the neardup/decontaminated boundary — don't re-pin.)
-        if not surviving.storageLevel.useMemory:
-            surviving = surviving.persist()
-            rung_pins.append(surviving)
-        keep_dsir = dsir_resample(
-            surviving, dsir_target, dsir_k, text_col, id_col,
-            dim=dsir_dim,
-        ).select(id_col)
-        surviving = obs(
-            surviving.join(F.broadcast(keep_dsir), id_col, "left_semi"),
-            "dsir",
-        )
-
-    out = train_val_test_split(surviving, id_col, train, val).select(
-        id_col, text_col, "lang_guess", "n_ws", "split"
-    )
-    out._pinned = [*span_pins, *rung_pins, exact, *audit_pins]
-    return out
-
-
-# --- rung-checkpointed (resumable) curation -----------------------------------
-
-#: Rung order for the staged ladder; each entry is a parquet dir under the
-#: store root whose presence (with Spark's _SUCCESS marker) means "completed".
-STAGED_RUNGS = ("input", "gated", "lm_gated", "clf_gated", "exact",
-                "neardup", "decontaminated", "dsir", "final")
-
-
-def _input_identity(df) -> str | None:
-    """Stable identity of a DataFrame's file-backed inputs: sha256 over
-    the sorted ``inputFiles`` list (paths, which for immutable parquet
-    layouts identify the bytes).  None for in-memory / non-file plans —
-    those cannot be identified and the caller falls back to a warning."""
-    if df is None:
-        return None
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return None
-    if not files:
-        return None
-    import hashlib
-
-    return hashlib.sha256("\n".join(files).encode("utf-8")).hexdigest()
-
-
-def curate_corpus_staged(
-    docs: DataFrame,
-    store_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    langs: tuple[str, ...] = ("en",),
-    min_tokens: int = 5,
-    max_dup_line_frac: float = 0.5,
-    max_top_bigram_frac: float = 0.5,
-    neardup_threshold: float = 0.7,
-    paragraph_max_df: int | None = None,
-    span_n: int | None = None,
-    span_stride: int | None = None,
-    line_dedup: bool = False,
-    html: bool = False,
-    benchmark: DataFrame | None = None,
-    decontam_n: int = 8,
-    decontam_min_frac: float | None = 0.1,
-    train: float = 0.9,
-    val: float = 0.05,
-    resume: bool = True,
-    lease_timeout_sec: float | None = None,
-    stop_after: str | None = None,
-    lm_ref: DataFrame | None = None,
-    lm_ppl_max: float | None = None,
-    lm_vocab_size: int = 50_000,
-    clf_pos: DataFrame | None = None,
-    clf_neg: DataFrame | None = None,
-    clf_min_score: float | None = None,
-    clf_dim: int = 1 << 16,
-    dsir_target: DataFrame | None = None,
-    dsir_k: int | None = None,
-    dsir_dim: int = 1 << 14,
-) -> DataFrame:
-    """:func:`curate_corpus` with each rung boundary CHECKPOINTED to
-    ``store_dir`` — the fault-tolerance contract a multi-hour corpus
-    curation job needs: a run killed at rung 4 restarts from rung 4,
-    not rung 0.  Same rungs, same operators, same deterministic
-    hash-keyed decisions, so the final table is row-identical to the
-    one-shot ladder (test-pinned).
-
-    Each rung writes to ``<store_dir>/_tmp_<rung>`` and renames into
-    place — readers and resumers only ever see complete rungs (Spark's
-    ``_SUCCESS`` marker is checked too, guarding a crash between write
-    and rename).  A ``curation.json`` manifest pins the ladder
-    parameters AND the input identity (a digest of the docs' and
-    benchmark's sorted parquet ``inputFiles``): resuming with DIFFERENT
-    parameters or against DIFFERENT input data is a loud error, not a
-    silently mixed corpus — the committed rungs came from the old
-    files.  In-memory inputs (no file lineage) cannot be identified;
-    those resume with a ``UserWarning`` and the same-docs contract
-    falls back to the caller.  ``resume=False`` wipes the store and
-    recomputes everything.  ``lease_timeout_sec`` serializes two
-    concurrent runners over the same store via :class:`~timesearch_spark.
-    fs.WriterLease` (same contract as the ingest stores).
-
-    Trade vs the one-shot ladder: every boundary pays a parquet
-    write+read instead of an in-memory pin.  At benchmark scale that is
-    pure overhead (~the size of the surviving rows, which the gate has
-    already shrunk); at 100 TB it is the difference between re-running
-    a day of shuffles and reading yesterday's survivors back columnar.
-    ``stop_after`` (a rung name) ends the run after that rung commits —
-    the ops hook for staged/priority scheduling, and the crash injection
-    point for the resume tests.
-
-    Unlike :func:`curate_corpus`, nothing stays persist()ed and nothing
-    rides on ``_pinned`` — the parquet rungs ARE the pins (the span
-    rung's transient caches are released the moment its parquet
-    commits); there is no release contract.
-    """
-    from timesearch_spark import fs as fsmod
-
-    if stop_after is not None and stop_after not in STAGED_RUNGS:
-        raise ValueError(
-            f"stop_after must be one of {STAGED_RUNGS}, got {stop_after!r}"
-        )
-    if stop_after == "decontaminated" and benchmark is None:
-        raise ValueError(
-            "stop_after='decontaminated' needs a benchmark — without one "
-            "that rung does not exist"
-        )
-    if stop_after == "input" and paragraph_max_df is None and span_n is None:
-        raise ValueError(
-            "stop_after='input' needs paragraph_max_df or span_n — with "
-            "neither configured the input rung is the identity and is "
-            "never committed"
-        )
-    if (lm_ref is None) != (lm_ppl_max is None):
-        raise ValueError(
-            "curate_corpus_staged: lm_ref and lm_ppl_max come together — "
-            "a reference corpus without a perplexity bound (or vice "
-            "versa) would silently gate nothing")
-    if stop_after == "lm_gated" and lm_ref is None:
-        raise ValueError(
-            "stop_after='lm_gated' needs lm_ref/lm_ppl_max — without "
-            "them that rung does not exist"
-        )
-    _validate_clf_params(clf_pos, clf_neg, clf_min_score,
-                         "curate_corpus_staged")
-    if stop_after == "clf_gated" and clf_pos is None:
-        raise ValueError(
-            "stop_after='clf_gated' needs clf_pos/clf_neg/clf_min_score "
-            "— without them that rung does not exist"
-        )
-    _validate_dsir_params(dsir_target, dsir_k, "curate_corpus_staged")
-    if stop_after == "dsir" and dsir_target is None:
-        raise ValueError(
-            "stop_after='dsir' needs dsir_target/dsir_k — without them "
-            "that rung does not exist"
-        )
-    spark = docs.sparkSession
-    fs = fsmod.get_fs(spark, store_dir)
-    root = store_dir.rstrip("/")
-    fs.mkdirs(root)
-    params = {
-        "text_col": text_col, "id_col": id_col, "langs": list(langs),
-        "min_tokens": min_tokens, "max_dup_line_frac": max_dup_line_frac,
-        "max_top_bigram_frac": max_top_bigram_frac,
-        "neardup_threshold": neardup_threshold,
-        "paragraph_max_df": paragraph_max_df,
-        "span_n": span_n, "span_stride": span_stride,
-        "has_benchmark": benchmark is not None,
-        "decontam_n": decontam_n, "decontam_min_frac": decontam_min_frac,
-        "train": train, "val": val,
-    }
-    if line_dedup:
-        # present only when ON, like the lm/clf keys below: pre-r12
-        # manifests (no line_dedup key) stay resumable by default runs
-        params["line_dedup"] = True
-    if html:
-        # same contract: present only when the extraction rung is on,
-        # so pre-r14 manifests stay resumable by html-off runs while
-        # mixing html-on and html-off over one store errors loudly
-        params["html"] = True
-    if lm_ref is not None:
-        # only present when the rung is ON: a pre-r12 manifest (no lm
-        # keys) stays resumable by an lm-off run, while mixing lm-on
-        # and lm-off runs over one store is the loud params error
-        params.update({"lm_ppl_max": lm_ppl_max,
-                       "lm_vocab_size": lm_vocab_size, "has_lm_ref": True})
-    if clf_pos is not None:
-        # same contract as the lm keys: present only when the rung is on
-        params.update({"clf_min_score": clf_min_score, "clf_dim": clf_dim,
-                       "has_clf_ref": True})
-    if dsir_target is not None:
-        # same contract again: keys present only when the rung is on
-        params.update({"dsir_k": dsir_k, "dsir_dim": dsir_dim,
-                       "has_dsir_target": True})
-    inputs = {
-        "docs": _input_identity(docs),
-        "benchmark": _input_identity(benchmark),
-        "lm_ref": _input_identity(lm_ref),
-        "clf_pos": _input_identity(clf_pos),
-        "clf_neg": _input_identity(clf_neg),
-        "dsir_target": _input_identity(dsir_target),
-    }
-
-    with fsmod.WriterLease.maybe(fs, root, lease_timeout_sec):
-        manifest_path = f"{root}/curation.json"
-        prev = fsmod.read_json(fs, manifest_path, default={})
-        if not resume or not prev:
-            for rung in STAGED_RUNGS:
-                fs.delete(f"{root}/{rung}")
-                fs.delete(f"{root}/_tmp_{rung}")
-            fsmod.write_json_atomic(
-                fs, manifest_path, {"params": params, "inputs": inputs}
-            )
-        elif prev.get("params") != params:
-            # union of key sets: an lm-on manifest resumed by an lm-off
-            # run differs only by keys ABSENT from the new params
-            changed = sorted(
-                k for k in set(params) | set(prev.get("params", {}))
-                if prev.get("params", {}).get(k) != params.get(k)
-            )
-            raise ValueError(
-                "curate_corpus_staged: resuming with different parameters "
-                f"than the manifest at {manifest_path} (changed: {changed}); "
-                "pass resume=False to discard the stored rungs and rerun"
-            )
-        else:
-            # input-identity drift is the same class of error as a
-            # parameter change: committed rungs were computed from the
-            # OLD files, and mixing them with new-data rungs is the
-            # silently-mixed corpus the manifest exists to prevent
-            prev_inputs = prev.get("inputs", {})
-            drifted = sorted(
-                k for k in inputs
-                if inputs[k] is not None
-                and prev_inputs.get(k) is not None
-                and inputs[k] != prev_inputs[k]
-            )
-            if drifted:
-                raise ValueError(
-                    "curate_corpus_staged: resuming against different "
-                    f"input data than the manifest at {manifest_path} "
-                    f"(drifted: {drifted}); pass resume=False to discard "
-                    "the stored rungs and rerun"
-                )
-            active = {"docs": True, "benchmark": benchmark is not None,
-                      "lm_ref": lm_ref is not None,
-                      "clf_pos": clf_pos is not None,
-                      "clf_neg": clf_neg is not None,
-                      "dsir_target": dsir_target is not None}
-            unverifiable = sorted(
-                k for k in inputs
-                if active[k]
-                and (inputs[k] is None or prev_inputs.get(k) is None)
-            )
-            if unverifiable:
-                import warnings
-
-                warnings.warn(
-                    "curate_corpus_staged: cannot verify input identity "
-                    f"for {unverifiable} (in-memory input or pre-r9 "
-                    "manifest) — the resume assumes the same inputs as "
-                    "the committed rungs",
-                    UserWarning,
-                    stacklevel=2,
-                )
-
-        def stage(rung: str, compute):
-            """Return the rung's DataFrame, computing + committing it only
-            when no completed copy exists; None = ladder stops here."""
-            final = f"{root}/{rung}"
-            if fs.exists(f"{final}/_SUCCESS"):
-                return spark.read.parquet(final)
-            df = compute()
-            tmp = f"{root}/_tmp_{rung}"
-            fs.delete(tmp)
-            df.write.mode("overwrite").parquet(tmp)
-            fs.delete(final)  # a crashed write without _SUCCESS
-            fs.rename(tmp, final)
-            return spark.read.parquet(final)
-
-        # The input rung exists to checkpoint the paragraph/span surgery;
-        # with neither configured it would be a byte-identical full copy
-        # of the (at scale, 100 TB) source corpus — skip the write and
-        # let the gate read the source directly.  Resume is unaffected:
-        # the resume contract already requires the caller to pass the
-        # same docs, which IS the identity rung.  The span rung's
-        # persisted sub-plans (captured by _rung_surgery) are released
-        # as soon as the rung parquet is committed — the parquet IS the
-        # pin from then on, unlike the one-shot ladder where the handles
-        # must outlive the returned plan.
-        surgery_pins: list = []
-
-        def build_input():
-            d, pins = _rung_surgery(
-                docs, text_col, id_col, paragraph_max_df, span_n,
-                span_stride, line_dedup=line_dedup, html=html,
-            )
-            surgery_pins.extend(pins)
-            return d
-
-        if paragraph_max_df is not None or span_n is not None \
-                or line_dedup or html:
-            cur = stage("input", build_input)
-            for p in surgery_pins:
-                p.unpersist()
-        else:
-            cur = docs
-        if stop_after == "input":
-            return cur
-
-        cur = stage(
-            "gated",
-            lambda: cur.join(
-                _rung_quality_keep(
-                    cur, text_col, id_col, langs, min_tokens,
-                    max_dup_line_frac, max_top_bigram_frac,
-                ),
-                id_col,
-            ),
-        )
-        if stop_after == "gated":
-            return cur
+        ))
 
         if lm_ref is not None:
             def build_lm_gated():
-                # same rung as the one-shot ladder (curate_corpus): the
-                # vocab is bounded broadcast state, so this is one
-                # explode + broadcast-join + hash-agg pass over the
-                # heuristic-gated survivors — no corpus-sized shuffle.
-                # Committing it to parquet means a killed run never
-                # re-fits the reference LM: the rung output is the
-                # checkpoint, and the vocab is rebuilt only when the
-                # rung itself must be recomputed.
+                # CCNet-style perplexity gate on the heuristic-gated
+                # survivors: the vocab is bounded broadcast state, so
+                # this adds one explode + broadcast-join + hash-agg pass
+                # — no new corpus-sized shuffle — and runs BEFORE dedup
+                # for the same reason the quality gate does (dedup's
+                # shuffles only carry keepers).
                 from timesearch_spark.operators.textstats import (
                     lm_score, unigram_lm,
                 )
 
                 vocab, oov = unigram_lm(
-                    lm_ref, text_col, vocab_size=lm_vocab_size
-                )
-                keep_lm = (
+                    lm_ref, text_col, vocab_size=lm_vocab_size)
+                keep = (
                     lm_score(cur, vocab, oov, text_col, id_col)
-                    .filter(
-                        (F.col("n_tok") > 0) & (F.col("ppl") <= lm_ppl_max)
-                    )
+                    .filter((F.col("n_tok") > 0)
+                            & (F.col("ppl") <= lm_ppl_max))
                     .select(id_col)
                 )
-                return cur.join(keep_lm, id_col, "left_semi")
+                return cur.join(keep, id_col, "left_semi")
 
-            cur = stage("lm_gated", build_lm_gated)
-            if stop_after == "lm_gated":
-                return cur
+            cur = b.cross("lm_gated", build_lm_gated)
 
         if clf_pos is not None:
             def build_clf_gated():
-                # the model refits only when this rung must recompute —
-                # the committed rung parquet is the checkpoint, exactly
-                # like the lm rung's vocabulary
+                # Trained-classifier gate (the third standard quality
+                # filter, after the heuristic gate and the LM rung): fit
+                # once from the bounded labeled sample, then one
+                # map-side scoring pass over the survivors — the weight
+                # table is broadcast state like the LM vocab, and the
+                # rung runs BEFORE dedup for the same cost argument.
                 from timesearch_spark.operators.textstats import (
                     quality_clf_score, train_quality_classifier,
                 )
 
                 Wc, bc = train_quality_classifier(
-                    clf_pos, clf_neg, text_col, dim=clf_dim
-                )
-                keep_clf = (
-                    quality_clf_score(
-                        cur, Wc, bc, text_col, id_col, dim=clf_dim
-                    )
+                    clf_pos, clf_neg, text_col, dim=clf_dim)
+                keep = (
+                    quality_clf_score(cur, Wc, bc, text_col, id_col,
+                                      dim=clf_dim)
                     .filter(F.col("score") >= clf_min_score)
                     .select(id_col)
                 )
-                return cur.join(keep_clf, id_col, "left_semi")
+                return cur.join(keep, id_col, "left_semi")
 
-            cur = stage("clf_gated", build_clf_gated)
-            if stop_after == "clf_gated":
-                return cur
+            cur = b.cross("clf_gated", build_clf_gated)
 
-        cur = stage(
-            "exact",
-            lambda: cur.join(_rung_exact_keepers(cur, text_col, id_col), id_col),
-        )
-        if stop_after == "exact":
-            return cur
+        # exact dedup: keep the lowest id of each identical-text group
+        cur = b.cross("exact", lambda: cur.join(
+            _rung_exact_keepers(cur, text_col, id_col), id_col))
 
-        cur = stage(
-            "neardup",
-            lambda: cur.join(
+        def build_neardup():
+            # near-dup removal, transitively closed: pairs → components
+            # → keeper (see _rung_neardup_non_keepers for the plan notes)
+            kept = cur.join(
                 _rung_neardup_non_keepers(
                     cur, text_col, id_col, neardup_threshold,
-                    # a scheme:// store means cluster storage: the
-                    # hash-min loop checkpoints durably next to the
-                    # rungs instead of into executor-local blocks
-                    checkpoint_dir=fsmod.derive_checkpoint_dir(root),
+                    checkpoint_dir=b.checkpoint_dir, tok_col=b.tok_col,
                 ),
                 id_col,
                 "left_anti",
-            ),
-        )
-        if stop_after == "neardup":
-            return cur
+            )
+            return kept.drop(b.tok_col) if b.tok_col else kept
+
+        cur = b.cross("neardup", build_neardup)
 
         if benchmark is not None:
-            cur = stage(
-                "decontaminated",
-                lambda: cur.join(
-                    _rung_decontam_hits(
-                        cur, benchmark, text_col, id_col,
-                        decontam_n, decontam_min_frac,
-                    ),
-                    id_col,
-                    "left_anti",
+            # decontaminate LAST: the broadcast-probe runs over the
+            # smallest surviving set, and near-dups of a leaked doc are
+            # already gone
+            cur = b.cross("decontaminated", lambda: cur.join(
+                _rung_decontam_hits(
+                    cur, benchmark, text_col, id_col,
+                    decontam_n, decontam_min_frac,
                 ),
-            )
-            if stop_after == "decontaminated":
-                return cur
+                id_col,
+                "left_anti",
+            ))
 
         if dsir_target is not None:
             def build_dsir():
-                # the two bucket models refit only when this rung must
-                # recompute — the committed rung parquet is the
-                # checkpoint, exactly like the lm rung's vocabulary and
-                # the clf rung's weights; `cur` is already a committed
-                # parquet read, so the eager model collects scan the
-                # rung, not the ladder
+                # DSIR selection LAST (public recipe: Xie et al. 2023):
+                # the importance pool is the final survivor set.
+                # dsir_resample collects its two dim-bounded bucket
+                # models EAGERLY (broadcast-state build, like the
+                # near-dup rung's octet probe), so the pool is pinned
+                # first and the selection join reuses it.
+                pool = b.pin(cur)
                 keep = dsir_resample(
-                    cur, dsir_target, dsir_k, text_col, id_col,
+                    pool, dsir_target, dsir_k, text_col, id_col,
                     dim=dsir_dim,
                 ).select(id_col)
-                return cur.join(F.broadcast(keep), id_col, "left_semi")
+                return pool.join(F.broadcast(keep), id_col, "left_semi")
 
-            cur = stage("dsir", build_dsir)
-            if stop_after == "dsir":
-                return cur
+            cur = b.cross("dsir", build_dsir)
 
-        return stage(
-            "final",
+        return b.finish(
             lambda: train_val_test_split(cur, id_col, train, val).select(
                 id_col, text_col, "lang_guess", "n_ws", "split"
-            ),
+            )
         )
+
+    return boundary.run(ladder)
 
 
 # --- corpus mixing: weighted resampling + token budgets ----------------------

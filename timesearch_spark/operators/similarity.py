@@ -400,15 +400,6 @@ def train_codebook(
     ]
 
 
-def _rounded_cos_lit(vec_col, centroid: list[float]):
-    """ROUND(cos(v, centroid), 6) with the centroid as a literal array —
-    the sequential-fold cosine, so the rounded value is bit-identical to
-    DuckDB's ``list_cosine_similarity`` (see functions.vectors).  One
-    F.lit(list) call, not dim element-wise lits (plan-construction cost,
-    see signature_col)."""
-    return F.round(cosine(vec_col, F.lit([float(x) for x in centroid])), 6)
-
-
 def _centroid_scores(vec_col, centroids: list[tuple[int, list[float]]]):
     """array<struct<cos,negcid>> of ROUND(cos(v, centroid), 6) against
     every centroid, built as ONE transform lambda over a literal

@@ -83,14 +83,6 @@ def quality_score(col, lang: str = "en") -> Column:
 
 # --- language ID -----------------------------------------------------------------
 
-def lang_scores(col) -> Column:
-    """Map of lang → stopword hit count."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in STOPWORDS]),
-        F.array(*[stopword_hits(col, lang) for lang in STOPWORDS]),
-    )
-
-
 def lang_id(col) -> Column:
     """Argmax language by stopword hits; ties broken by language code
     order; all-zero scores → 'und' (undetermined)."""
@@ -665,7 +657,7 @@ def _qclf_feature_idx(tok_col, dim: int, seed: str = _QCLF_SEED,
 
     ``tok_col`` must be a materialized array column, NOT a fresh
     ``tokens(text)`` expression: interpreted HOF lambdas re-evaluate
-    captured subtrees per element (the shingles hot-path warning), so a
+    captured subtrees per element (see dedup.shingles_from), so a
     captured split() would tokenize O(tokens) times per document."""
     t = _c(tok_col)
 

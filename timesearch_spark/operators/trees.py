@@ -1067,7 +1067,6 @@ def _page_head_col() -> F.Column:
 def render_thread_pages(
     submissions: DataFrame,
     comments: DataFrame,
-    checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
     max_thread_rows: int = DEFAULT_MAX_THREAD_ROWS,
 ) -> DataFrame:
@@ -1081,13 +1080,12 @@ def render_thread_pages(
     t3_ fullname before the walk, so raw and prefixed spellings of one
     thread assemble as ONE tree instead of two concatenated fragments.
 
-    ``checkpoint_dir`` is accepted for interface stability (callers
-    derive it for scheme:// archives) but unused: the fused
-    walk+render+assemble pass (see :func:`assemble_thread_pages`) is a
-    single non-iterative stage with no growing lineage to truncate —
-    page assembly inherently holds one whole thread per task, so the
-    distributed pointer-doubling walk (which the forest ANALYTICS
-    queries still use) buys nothing on this path."""
+    No checkpoint directory: the fused walk+render+assemble pass (see
+    :func:`assemble_thread_pages`) is a single non-iterative stage with
+    no growing lineage to truncate — page assembly inherently holds one
+    whole thread per task, so the distributed pointer-doubling walk
+    (which the forest ANALYTICS queries still use) buys nothing on this
+    path."""
     norm = F.when(
         F.col("submission").startswith("t3_"), F.col("submission")
     ).otherwise(F.concat(F.lit("t3_"), F.col("submission")))

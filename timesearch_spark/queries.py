@@ -828,8 +828,9 @@ _TOK_SQL = r"list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), x -> x
 
 
 def _grams_sql(n: int, rel: str = "documents") -> str:
-    """DuckDB mirror of dedup.shingles(text, n) over relation ``rel``:
-    word n-grams, whole-text fallback below n tokens, distinct per doc."""
+    """DuckDB mirror of dedup.shingles_from(tokens(text), n) over
+    relation ``rel``: word n-grams, whole-text fallback below n tokens,
+    distinct per doc."""
     return f"""
     tok AS (SELECT doc_id, {_TOK_SQL} AS t FROM {rel}),
     g AS (

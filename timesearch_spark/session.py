@@ -59,16 +59,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def configure_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Adjust partition sizing for a known input volume.
-
-    At 100 TB with 128 MiB target partitions we want ~800k input splits and
-    shuffle partitions sized so post-shuffle partitions stay under executor
-    memory; AQE coalesces down from there at runtime.
-    """
-    per_part = 128 * 1024 * 1024
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(per_part))
-    want = max(32, min(200_000, target_bytes // per_part))
-    spark.conf.set("spark.sql.shuffle.partitions", str(want))

@@ -30,8 +30,6 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
-
 
 class RateLimiter:
     """Token-bucket limiter (pushshift.py:54: allowance 120 / period 60 s)."""
@@ -107,16 +105,6 @@ def paginate(
         prev_ids = ids
         # keyset step with 1-second overlap (pushshift.py:138-142)
         after = batch[-1]["created_utc"] - 1
-
-
-def pages_to_dataframes(
-    spark: SparkSession,
-    pages: Iterator[list[dict]],
-    schema,
-) -> Iterator[DataFrame]:
-    """Each page → one small DataFrame (the foreachBatch input shape)."""
-    for page in pages:
-        yield spark.createDataFrame(page, schema)
 
 
 def enrichment_interleave(

@@ -380,9 +380,3 @@ def event_ts_bound(epoch_sec: int, dtype: str = "bigint"):
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql queries."""
-    for n in TABLE_NAMES:
-        load(spark, sf_dir, n).createOrReplaceTempView(n)
