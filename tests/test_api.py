@@ -303,7 +303,8 @@ def test_offline_reading_auto_routes_mega_threads(spark, tmp_path):
     under max_thread_rows take the fused assembler, over-bound threads
     take the streamed no-ceiling arm, one run, no error (r12 raised a
     loud ValueError instead), bytes identical to an all-streamed run
-    AND to an unrouted fused run; --stream stays the forced override.
+    AND to an unrouted fused run (max_thread_rows=0 streams every
+    commented thread).
     Counter evidence: the writer spies see exactly the expected split."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
@@ -347,7 +348,7 @@ def test_offline_reading_auto_routes_mega_threads(spark, tmp_path):
 
     # byte identity against both unrouted arms
     all_stream = tmp_path / "allstream"
-    api.offline_reading(ar, str(all_stream), stream=True)
+    api.offline_reading(ar, str(all_stream), max_thread_rows=0)
     unrouted = tmp_path / "unrouted"
     api.offline_reading(ar, str(unrouted))  # default bound: all fused
     for f in ("t3_s0.html", "t3_s1.html", "t3_s2.html"):
@@ -533,8 +534,9 @@ def test_offline_reading_mass_rollback_deletes_distributed(
 
 @pytest.mark.slow
 def test_offline_reading_incremental_streamed_arm(spark, tmp_path):
-    """incremental composes with stream=True: the delta routes through
-    the fragment writer and produces the same bytes."""
+    """incremental composes with the streamed arm (max_thread_rows=0):
+    the delta routes through the fragment writer and produces the same
+    bytes."""
     ar = api.Archive(spark, str(tmp_path / "ar"))
     p = tmp_path / "dump.jsonl"
     p.write_text("\n".join(json.dumps(o) for o in
@@ -543,14 +545,14 @@ def test_offline_reading_incremental_streamed_arm(spark, tmp_path):
 
     out = tmp_path / "threads"
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 1
+                               max_thread_rows=0) == 1
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 0
+                               max_thread_rows=0) == 0
     p2 = tmp_path / "dump2.jsonl"
     p2.write_text(json.dumps(_com(5, parent_id="t1_c0", link_id="t3_s0")))
     api.ingest_jsonfile(ar, str(p2))
     assert api.offline_reading(ar, str(out), incremental=True,
-                               stream=True) == 1
+                               max_thread_rows=0) == 1
     full = tmp_path / "full"
     api.offline_reading(ar, str(full))
     assert (out / "t3_s0.html").read_bytes() == \

@@ -447,10 +447,11 @@ def test_thread_pages_scheme_arm_byte_identical(spark, tmp_path):
 
 @pytest.mark.slow
 def test_offline_reading_stream_arm_byte_identical(spark, tmp_path):
-    """api.offline_reading(stream=True) — the no-ceiling arm end to end
-    — must write the same file SET (zero-comment submissions included,
-    comment-only headless threads excluded) with the same bytes as the
-    fused default, on both the local and the file:// writer paths."""
+    """api.offline_reading(max_thread_rows=0) — the no-ceiling arm end
+    to end for every commented thread — must write the same file SET
+    (zero-comment submissions included, comment-only headless threads
+    excluded) with the same bytes as the fused default, on both the
+    local and the file:// writer paths."""
     import json
     import os
 
@@ -489,7 +490,8 @@ def test_offline_reading_stream_arm_byte_identical(spark, tmp_path):
     fused = tmp_path / "fused"
     assert api.offline_reading(ar, str(fused)) == 2
     for streamed in (tmp_path / "streamed", f"file://{tmp_path}/schemed"):
-        assert api.offline_reading(ar, str(streamed), stream=True) == 2
+        assert api.offline_reading(ar, str(streamed),
+                                   max_thread_rows=0) == 2
         local = str(streamed).removeprefix("file://")
         assert sorted(os.listdir(local)) == ["t3_s1.html", "t3_s2.html"]
         for name in ("t3_s1.html", "t3_s2.html"):

@@ -405,7 +405,6 @@ def _thread_fingerprints(submissions: DataFrame,
 def offline_reading(archive: Archive, out_dir: str,
                     specific_submission: str | None = None,
                     checkpoint_dir: str | None = None,
-                    stream: bool = False,
                     incremental: bool = False,
                     max_thread_rows: int | None = None) -> int:
     """Thread HTML export (§3.3): forest walk → render → one file per
@@ -428,26 +427,24 @@ def offline_reading(archive: Archive, out_dir: str,
     one-pass assembler and the over-bound ones through the streamed
     no-ceiling arm, same run, same bytes — so one 10M-comment
     mega-thread no longer fails the whole export (the fused arm's loud
-    ValueError) or forces every small thread onto the slower arm.  When
-    no thread is over the bound (the probe's common answer) the plan is
-    exactly the fused-only export.  ``stream=True`` remains the forced
-    override: EVERYTHING takes the no-ceiling arm — the distributed
-    pointer-doubling walk orders page fragments and an O(tree depth)
-    stack writer folds them into the SAME bytes
-    (trees.thread_page_fragments → exports.write_thread_docs_streamed)
-    — slower on bounded archives (it pays the walk's rounds the fused
-    one-pass assembler avoids), but a mega-thread streams through one
-    task's O(depth) stack instead of erroring.
+    ValueError) or forces every small thread onto the slower arm.  The
+    no-ceiling arm's distributed pointer-doubling walk orders page
+    fragments and an O(tree depth) stack writer folds them into the
+    SAME bytes (trees.thread_page_fragments →
+    exports.write_thread_docs_streamed).  When no thread is over the
+    bound (the probe's common answer) the plan is exactly the
+    fused-only export; ``max_thread_rows=0`` sends every commented
+    thread through the no-ceiling arm.
 
     ``incremental=True`` re-renders ONLY threads whose render-relevant
     bytes changed since the last run (new/edited/deleted comments,
     submission title/selftext/score edits), judged by a per-thread
     fingerprint manifest kept in ``out_dir/_page_manifest`` — at
     archive scale a daily delta re-renders the <1% that moved, not
-    millions of unchanged pages.  Composes with ``stream``.  Threads
-    DELETED from the archive (merge rollback, re-ingest from a narrower
-    dump) have their stale pages removed, so the incremental file set
-    converges to what a from-scratch render would produce.  Crash
+    millions of unchanged pages.  Threads DELETED from the archive
+    (merge rollback, re-ingest from a narrower dump) have their stale
+    pages removed, so the incremental file set converges to what a
+    from-scratch render would produce.  Crash
     safety: pages are written BEFORE stale deletes and the manifest
     swap (staging dir + delete/rename through the fs shim), so an
     interruption leaves the OLD manifest and the next run merely
@@ -593,16 +590,10 @@ def offline_reading(archive: Archive, out_dir: str,
     bound = (_trees.DEFAULT_MAX_THREAD_ROWS
              if max_thread_rows is None else max_thread_rows)
     try:
-        if stream:
-            frags = _trees.thread_page_fragments(
-                submissions, comments, checkpoint_dir=checkpoint_dir
-            )
-            n = exports.write_thread_docs_streamed(frags, out_dir)
-        else:
-            n = _routed_page_export(
-                submissions, comments, out_dir,
-                checkpoint_dir=checkpoint_dir, bound=bound,
-            )
+        n = _routed_page_export(
+            submissions, comments, out_dir,
+            checkpoint_dir=checkpoint_dir, bound=bound,
+        )
         if incremental:
             _swap_manifest()
     finally:
@@ -641,10 +632,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
             pages = render_thread_pages(
                 submissions, comments, max_thread_rows=bound,
             )
-            # pages end '</html>' with no trailing newline (the
-            # reference writes none) — '>' is the staged arm's
-            # separator contract
-            n = exports.write_thread_docs(pages, out_dir, line_sep=">")
+            n = exports.write_thread_docs(pages, out_dir)
         else:
             over_subs = over.select(F.col("submission").alias("idstr"))
             fused_pages = render_thread_pages(
@@ -654,8 +642,7 @@ def _routed_page_export(submissions: DataFrame, comments: DataFrame,
                             "left_anti"),
                 max_thread_rows=bound,
             )
-            n = exports.write_thread_docs(
-                fused_pages, out_dir, line_sep=">")
+            n = exports.write_thread_docs(fused_pages, out_dir)
             frags = _trees.thread_page_fragments(
                 submissions.join(
                     F.broadcast(over_subs), "idstr", "left_semi"),

@@ -628,10 +628,14 @@ class WriterLease:
 
 def pyarrow_fs_uri(uri: str) -> str:
     """The pyarrow.fs spelling of a Hadoop-style URI: Hadoop's s3a/s3n
-    connectors are plain ``s3`` to pyarrow; everything else passes
-    through.  Used by executor-side metadata work (the staged HTML
-    sink's rename pass), where py4j is unavailable and pyarrow's
-    ``FileSystem.from_uri`` is the portable resolver."""
+    connectors are plain ``s3`` to pyarrow; a plain path becomes
+    absolute (``from_uri`` rejects a relative one, and executors may
+    not share the driver's working directory); everything else passes
+    through.  Used by executor-side IO (the thread-page writer, the
+    streamed breakdown, stale-page deletes), where py4j is unavailable
+    and pyarrow's ``FileSystem.from_uri`` is the portable resolver."""
+    if not has_scheme(uri):
+        return os.path.abspath(uri)
     for h in ("s3a://", "s3n://"):
         if uri.startswith(h):
             return "s3://" + uri[len(h):]

@@ -1011,13 +1011,13 @@ def assemble_thread_pages(comments: DataFrame,
                         f"thread {sub!r} exceeds max_thread_rows="
                         f"{max_thread_rows} comments; the fused "
                         "assembler holds one whole thread per task by "
-                        "design.  If this thread is real, use the "
-                        "streamed arm (offline_reading --stream / "
-                        "api.offline_reading(stream=True): distributed "
-                        "walk + O(depth) stack writer, same bytes) or "
-                        "raise max_thread_rows=; if not, the corpus is "
-                        "mis-keyed — exclude the submission or fix the "
-                        "ingest.")
+                        "design.  If this thread is real, export it "
+                        "through api.offline_reading, which routes every "
+                        "thread over max_thread_rows to the streamed arm "
+                        "(distributed walk + O(depth) stack writer, same "
+                        "bytes), or raise max_thread_rows=; if not, the "
+                        "corpus is mis-keyed — exclude the submission or "
+                        "fix the ingest.")
         close_thread()
         if out_subs:
             yield pd.DataFrame({"submission": out_subs, "doc": out_docs})
